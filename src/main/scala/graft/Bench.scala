@@ -96,7 +96,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // median-of-N protocol (VERDICT r4 #4 / r6 #2): BASELINE.md records
     // 74–241 s same-code variance on this host, so a single run cannot
     // distinguish a plan regression from scheduler contention. Each query is
@@ -104,14 +103,7 @@ object Bench {
     // transient host stall hits one PASS, not every sample of one query) and
     // reported as the per-query MEDIAN.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.build(EngineSession.envCpus)
     plans.GraftOptimizations.install(spark)
     // untimed warm-up: JIT/codegen/session init + parquet footers, so the
     // alphabetically-first query doesn't carry ~5 s of one-time cost
@@ -140,6 +132,8 @@ object Bench {
       val failed = scala.collection.mutable.SortedSet[String]()
       val floorSamples = scala.collection.mutable.ListBuffer[Double]()
       for (rep <- 1 to reps) {
+        val r0 = System.nanoTime()
+        val c0 = EngineSession.compiledClasses
         // floor sampled once per PASS under the identical reps/median protocol
         // as every query (ADVICE r7: a single maximally-warm sample after all
         // reps understated the per-stream startup cost it calibrates)
@@ -160,6 +154,12 @@ object Bench {
               System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getClass.getSimpleName}: ${e.getMessage}")
           }
         }
+        // classes compiled in the pass: near 0 on a warm pass once the
+        // codegen cache holds the pass's working set, except for the
+        // streaming ops, whose tasks load generated classes through a new
+        // class loader per streaming query
+        System.err.println(f"[bench] attempt $attempt pass $rep: ${(System.nanoTime() - r0) / 1e9}%.1f s," +
+          s" ${EngineSession.compiledClasses - c0} classes compiled")
       }
       // a query that failed ANY rep reports -1 (failure stays distinguishable
       // from speed — VERDICT r1 #6), never a median of the surviving reps

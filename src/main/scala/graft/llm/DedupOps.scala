@@ -718,7 +718,11 @@ object DedupOps extends OpRegistry {
       val bnd = portableBands(portableSignature(docs))
         .groupBy("doc_id")
         .agg(collect_list(struct(col("band"), col("bh"))).as("bnds"))
-      val side = sh.join(bnd, "doc_id")
+      // a document with fewer than 3 tokens has no shingles, so no bands;
+      // it stays in the pair universe with an empty band list
+      val side = sh.join(bnd, Seq("doc_id"), "left")
+        .withColumn("bnds",
+          coalesce(col("bnds"), array().cast(bnd.schema("bnds").dataType)))
       val a = side.select(col("doc_id").as("id1"), col("shs").as("sh1"),
         col("bnds").as("b1"))
       val b = side.select(col("doc_id").as("id2"), col("shs").as("sh2"),

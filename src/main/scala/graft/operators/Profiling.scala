@@ -1016,14 +1016,9 @@ object Profiling extends OpRegistry {
   }
 
   private def inParallel[T](tasks: Seq[(String, () => T)]): Seq[(String, T)] = {
-    // pool width parameterized (r20, VERDICT r19 #4 adjudication): local
-    // default 4 (guide §2.6's 2-3-in-flight rule, one notch up for
-    // local[32]); SPARK_GRAFT_INGEST_POOL=1 degrades to sequential for
-    // A/B probes, larger values for a real cluster where chains park in
-    // longer stage tails.
-    val width = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_INGEST_POOL", "4").toInt)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+    // 4 job chains in flight: guide §2.6's 2-3-in-flight rule, one notch up
+    // for local[32]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
       val futs = tasks.map { case (name, f) =>
         name -> pool.submit(new java.util.concurrent.Callable[T] {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Catalyst optimizer rule (§2.12 extension surface, rung (c) of the
@@ -59,15 +60,28 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
 }
 
 /** Installer for sessions graft does not construct (the driver harness
-  * builds its own SparkSession): appends the rewrite to
-  * `spark.experimental.extraOptimizations`, which the optimizer runs as the
-  * final "User Provided Optimizers" batch. Idempotent. Sessions built from
-  * scratch can instead set `spark.sql.extensions=graft.GraftExtensions`.
+  * builds its own SparkSession). Idempotent.
+  *
+  *  - Appends the rewrite to `spark.experimental.extraOptimizations`, which
+  *    the optimizer runs as the final "User Provided Optimizers" batch.
+  *    Sessions built from scratch can instead set
+  *    `spark.sql.extensions=graft.GraftExtensions`.
+  *  - Sizes Spark's generated-class cache to
+  *    [[graft.EngineSession.CodegenCacheEntries]] on the session's SQL conf.
+  *    Spark reads that static conf once per JVM, when the codegen cache
+  *    initializes on the first compile, so `install` must run before the
+  *    session's first query; called later, it leaves the cache at the size
+  *    it already has.
   */
 object GraftOptimizations {
   def install(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteDotProduct
+    // a static conf: RuntimeConfig.set refuses it, the session's SQLConf
+    // takes it
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+      .setConfString(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        graft.EngineSession.CodegenCacheEntries.toString)
   }
 }

@@ -531,8 +531,8 @@ object Streaming extends OpRegistry {
     * log/b$id) or a content-deterministic checkpoint (labels/vN), so a
     * retried wave reproduces byte-identical store state. */
   /** Opt-in phase timing for [[ccProcessWave]] (measurement tooling, guide
-    * §1: phase attribution inside the wave — ProbeScc times whole waves).
-    * Zero cost unless SPARK_GRAFT_CC_PHASES=1. */
+    * §1: phase attribution inside the wave). Zero cost unless
+    * SPARK_GRAFT_CC_PHASES=1. */
   private val ccPhaseTiming = sys.env.get("SPARK_GRAFT_CC_PHASES").contains("1")
   @inline private def ccPhase[T](batchId: Long, label: String)(f: => T): T =
     if (!ccPhaseTiming) f

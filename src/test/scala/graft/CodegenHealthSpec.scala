@@ -83,4 +83,25 @@ class CodegenHealthSpec extends GraftSuite {
     assert(CodegenWarnProbe.hits.isEmpty,
       s"$name triggered a codegen bailout (interpreted fallback shipped silently in r6): $seen")
   }
+
+  test("codegen cache holds the skew working set: a repeated run recompiles almost nothing") {
+    // The benchmark's `skew` set needs about 215 generated classes. Spark's
+    // default cache of 100 is LRU, so a run in the same order as the last
+    // one missed on almost every class: at that size the second run
+    // recompiled 188 of the 212 classes the first run compiled.
+    // What a repeated run may still compile: a class whose source differs
+    // only in the whole-stage codegen stage id, which adaptive execution
+    // assigns in the order query stages finish (0 to 6 such classes a run).
+    val skew = Seq("dedup_components", "dedup_near_minhash", "jaccard_pairs",
+      "text_containment", "text_winnowing_fingerprints")
+    def compiled(): Long = {
+      CorpusArtifacts.clear()
+      val c0 = EngineSession.compiledClasses
+      skew.foreach(n => Bench.materialize(q(n)))
+      EngineSession.compiledClasses - c0
+    }
+    val first = compiled()
+    val second = compiled()
+    assert(second <= 20L, s"the second run recompiled $second classes (first run: $first)")
+  }
 }

@@ -71,6 +71,23 @@ class Round15bSpec extends GraftSuite {
     assert(r.getAs[Long]("recall_ppm") === 1000000L)
   }
 
+  test("dedup_lsh_eval: documents without bands stay in the pair universe") {
+    // empty and two-token documents have no 3-token shingle, hence no
+    // minhash bands; the DuckDB oracle pairs every document with every
+    // other, so the engine must too. Docs 1 and 2 share their text.
+    val dir = TestSpark.tempDir("graft_r15_lsh_empty_")
+    Seq((1L, "one two three four five"), (2L, "one two three four five"),
+      (3L, ""), (4L, "six seven eight nine ten"), (5L, ""), (6L, "eleven twelve"),
+      (8L, "thirteen fourteen fifteen sixteen"), (9L, ""))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val r = SparkEntry.queries("dedup_lsh_eval")(spark, dir).collect().head
+    assert(r.getAs[Long]("n_pairs") === 28L)        // C(8, 2)
+    assert(r.getAs[Long]("n_pos") === 1L)           // (1, 2)
+    assert(r.getAs[Long]("n_pred") === 1L)
+    assert(r.getAs[Long]("tp") === 1L)
+  }
+
   test("dedup_span_repeats: shared mid-doc run merges to one maximal span with exact coverage") {
     val dir = TestSpark.tempDir("graft_r15_span_")
     // docs 1 and 2 share a 10-token run (→ three repeated 8-gram
